@@ -444,8 +444,10 @@ def build_segments(
 def finalize_index(spark: SparkSession, index_dir: str) -> dict:
     """LSM-merge finalize: global stats + dictionary from block headers
     (no payload decode), then a single decode pass to attach block_max,
-    writing postings sorted by (term, block_seq) within each shard so
-    parquet min/max stats prune term lookups."""
+    writing postings sorted by (term, block_seq) within each shard.
+    Parquet min/max term stats prune term-filtered scans only once a
+    shard file outgrows one row group (Spark's 128 MB default); below
+    that a scan reads each shard's whole file."""
     timing = os.environ.get("SSSE_TIMING") == "1"
     t0 = time.perf_counter()
     manifest = index_store.read_manifest(spark, index_dir)

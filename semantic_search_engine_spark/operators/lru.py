@@ -1,12 +1,12 @@
 """Shared LRU-cache discipline for the driver-local probes.
 
-Both ``LocalIndexProbe`` (text) and ``LocalIVFProbe`` (vectors) keep an
-``OrderedDict`` LRU bounded by ``_cache_cap``; their batched search
-methods preload a whole batch's miss set, which is wasted I/O unless
-the preloaded entries SURVIVE until the per-query scoring pass. This
-context manager is that rule, written once: raise the cap for the
-batch's duration, then restore it and trim oldest-first — including on
-the exception path.
+The driver-local probes keep an ``OrderedDict`` LRU bounded by
+``_cache_cap``; ``LocalIVFProbe``'s batched search methods preload a
+whole batch's miss set, which is wasted I/O unless the preloaded
+entries SURVIVE until the per-query scoring pass. This context manager
+is that rule, written once: raise the cap for the batch's duration,
+then restore it and trim oldest-first — including on the exception
+path.
 """
 
 from __future__ import annotations

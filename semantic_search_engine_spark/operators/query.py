@@ -1,8 +1,9 @@
 """Index-backed top-k retrieval: exhaustive and block-max-pruned paths.
 
 Exhaustive (reference-semantics baseline, SURVEY §3.2):
-  query terms filter → postings scan (parquet row-group skipping on
-  `term` via min/max stats — postings are term-sorted per shard) →
+  query terms filter → postings scan (the `term` filter is pushed to
+  parquet; postings are term-sorted per shard, so min/max stats skip
+  row groups once a shard file holds more than one) →
   batch-decode blocks in Arrow batches (one vectorized varint pass per
   batch, no per-block Python) → Σ impact per (qid, docid) → per-qid
   top-k (window row_number, ties score desc / docid asc).
@@ -1539,23 +1540,28 @@ class LocalIndexProbe:
     The distributed paths are the right plan for query BATCHES (one
     amortized job), but a single k≤10 lookup pays the ~0.3 s Spark
     job-scheduling floor for a 10-row answer. This probe serves it
-    entirely in-process, reading per query ONLY the query terms'
-    posting blocks: a pyarrow dataset scan with a ``term isin`` filter
-    (parquet row-group statistics skip non-matching row groups — the
-    postings are term-sorted per shard, the same pruning the Spark
-    scan pushes down), decoded by the shared vectorized varint codec
-    and scored by the SAME ``_score_candidates`` kernel with the same
-    sorted-term float64 accumulation order and the same
-    (score desc, docid asc) tie rule — so rows are identical to
-    ``search_index_wand`` / ``search_index_exhaustive`` at θ·1.0
-    (pytest-asserted). The reference's serving shape
-    (/root/reference/src/IVF.py:159-191: memmap, touch only probed
-    regions, heapq the candidates) re-derived for the text index.
+    entirely in-process. It reads the index ONCE, at open: the
+    postings' compressed block columns, sorted by
+    ``(term, first_docid)`` into one contiguous Arrow table, and the
+    dictionary's ``(term, idf)`` sorted by term. A query then touches
+    only its terms' blocks: a binary search of the term columns finds
+    each term's contiguous row range (OOV = not in the dictionary), and
+    the range's slice of each payload column's values buffer is decoded
+    by the shared vectorized varint codec and scored by the SAME
+    ``_score_candidates`` kernel with the same sorted-term float64
+    accumulation order and the same (score desc, docid asc) tie rule —
+    so rows are identical to ``search_index_wand`` /
+    ``search_index_exhaustive`` at θ·1.0 (pytest-asserted). The
+    reference's serving shape (its ``src/IVF.py:159-191``: map the
+    packed segments once, touch only probed regions, heapq the
+    candidates) re-derived for the text index.
 
-    An LRU cache keeps the most recent ``cache_terms`` terms' decoded
-    postings (and idf) resident, so hot-term serving converges to pure
-    in-RAM scoring; memory is bounded by the cached terms' posting
-    sizes, not the corpus."""
+    Memory: the index's compressed postings stay resident (about their
+    parquet bytes on disk), plus an LRU of the most recent
+    ``cache_terms`` terms' DECODED postings (and idf), so hot-term
+    serving skips the decode too. Because nothing is read after open,
+    the probe keeps serving the snapshot it opened even when a later
+    ``finalize_index`` rewrites the directory."""
 
     def __init__(self, index_dir: str, cache_terms: int = 4096, arrow_threads: int | None = None):
         from collections import OrderedDict
@@ -1577,13 +1583,51 @@ class LocalIndexProbe:
         self.n_docs = int(stats["n_docs"])
         self.total_tokens = int(stats.get("total_tokens", 0))
         self.has_positions = bool(stats.get("has_positions", False))
-        self._post = ds.dataset(f"{index_dir}/postings", format="parquet")
-        self._dict = ds.dataset(f"{index_dir}/dictionary", format="parquet")
-        self._ds = ds
+
+        def read_sorted(sub: str, cols: list[str], keys: list[str]) -> dict:
+            # an index whose docs all tokenized empty has no term rows:
+            # its parquet dirs carry no schema to select from
+            dset = ds.dataset(f"{index_dir}/{sub}", format="parquet")
+            if "term" not in dset.schema.names:
+                return {c: np.empty(0, dtype=object if c == "term" else np.int64) for c in cols}
+            tbl = dset.to_table(columns=cols)
+            # 64-bit offsets: the sorted payload columns concatenate
+            # into one chunk each, which may outgrow 2 GiB
+            tbl = tbl.cast(pa.schema([
+                pa.field(f.name, pa.large_binary()) if pa.types.is_binary(f.type) else f
+                for f in tbl.schema
+            ]))
+            tbl = tbl.sort_by([(k, "ascending") for k in keys])
+            out = {}
+            for c in cols:
+                arr = tbl.column(c).combine_chunks()
+                if pa.types.is_large_binary(arr.type):
+                    _, offsets, values = arr.buffers()
+                    out[c] = (
+                        np.frombuffer(offsets, dtype=np.int64)[arr.offset : arr.offset + len(arr) + 1],
+                        np.frombuffer(values, dtype=np.uint8),
+                    )
+                else:
+                    out[c] = arr.to_numpy(zero_copy_only=False)
+            return out
+
+        cols = ["term", "first_docid", "n", "docids_bin", "tfs_bin", "dls_bin"]
+        if self.has_positions:
+            cols.append("positions_bin")
+        self._blocks = read_sorted("postings", cols, ["term", "first_docid"])
+        dictionary = read_sorted("dictionary", ["term", "idf"], ["term"])
+        self._terms, self._idf = dictionary["term"], dictionary["idf"]
         # term -> (idf, docids, tfs, dls, positions|None, run_starts|None)
         # | None for known-OOV terms
         self._cache: "OrderedDict[str, tuple | None]" = OrderedDict()
         self._cache_cap = cache_terms
+
+    def _payload(self, col: str, lo: int, hi: int) -> list:
+        """Rows [lo, hi)'s ``col`` payloads as ONE buffer slice — the
+        blocks are contiguous in the column's values buffer, so their
+        concatenation is a single zero-copy view."""
+        offsets, values = self._blocks[col]
+        return [values[offsets[lo] : offsets[hi]]]
 
     def _load_terms(self, terms: list[str], positions: bool = False) -> dict[str, tuple]:
         miss = [
@@ -1592,43 +1636,31 @@ class LocalIndexProbe:
             or (positions and self._cache[t] is not None and self._cache[t][4] is None)
         ]
         if miss:
-            ds = self._ds
-            idf_tbl = self._dict.to_table(
-                columns=["term", "idf"], filter=ds.field("term").isin(miss)
-            )
-            idf_by_term = dict(
-                zip(idf_tbl.column("term").to_pylist(), idf_tbl.column("idf").to_pylist())
-            )
-            cols = ["term", "first_docid", "n", "docids_bin", "tfs_bin", "dls_bin"]
-            if positions:
-                cols.append("positions_bin")
-            blk = (
-                self._post.to_table(columns=cols, filter=ds.field("term").isin(miss))
-                .to_pandas()
-                # ONE stable sort + binary-searched slices per term — a
-                # per-term equality scan is O(rows × terms) and dominates
-                # wide-miss loads (same fix as LocalIVFProbe._load_buckets)
-                .sort_values(["term", "first_docid"], kind="stable", ignore_index=True)
-            )
-            term_sorted = blk["term"].to_numpy()
-            for t in miss:
-                if t not in idf_by_term:
+            keys = np.array(miss, dtype=object)
+            at = np.searchsorted(self._terms, keys)
+            known = np.zeros(len(miss), dtype=bool)
+            ok = at < self._terms.size
+            known[ok] = self._terms[at[ok]] == keys[ok]
+            b = self._blocks
+            los = np.searchsorted(b["term"], keys, side="left")
+            his = np.searchsorted(b["term"], keys, side="right")
+            for t, i, is_known, lo, hi in zip(miss, at, known, los, his):
+                if not is_known:
                     self._cache[t] = None  # OOV — cached as such
                     continue
-                lo = np.searchsorted(term_sorted, t)
-                hi = np.searchsorted(term_sorted, t, side="right")
-                rows = blk.iloc[lo:hi]
                 d, tf, dl, _ = decode_blocks_batch(
-                    rows["first_docid"].to_numpy(), rows["n"].to_numpy(),
-                    rows["docids_bin"], rows["tfs_bin"], rows["dls_bin"],
+                    b["first_docid"][lo:hi], b["n"][lo:hi],
+                    self._payload("docids_bin", lo, hi),
+                    self._payload("tfs_bin", lo, hi),
+                    self._payload("dls_bin", lo, hi),
                 )
                 # shards are docid-disjoint and runs are first_docid-
                 # ordered, so the concatenation is already sorted-unique
                 if positions:
-                    pos, rs = decode_positions(tf, rows["positions_bin"])
+                    pos, rs = decode_positions(tf, self._payload("positions_bin", lo, hi))
                 else:
                     pos, rs = None, None
-                self._cache[t] = (float(idf_by_term[t]), d, tf, dl, pos, rs)
+                self._cache[t] = (float(self._idf[i]), d, tf, dl, pos, rs)
         out = {}
         for t in terms:
             self._cache.move_to_end(t)
@@ -1644,38 +1676,16 @@ class LocalIndexProbe:
         k: int = 10,
         excludes: list[str] | None = None,
     ) -> list[list[tuple[int, int, float]]]:
-        """Per-query results for a BATCH of queries, identical rows to
-        ``search`` on each — the union of the batch's distinct terms
-        preloads in bounded chunks (one term-filtered parquet read per
-        chunk, so the isin filter and decode working set stay bounded
-        at mega-batch width) before any scoring: a cold batch pays
-        O(terms/chunk) parquet round-trips instead of one per query.
-        The LRU cap is raised for the batch's duration so preloaded
-        terms survive until scored, then restored and trimmed — the
-        ``LocalIVFProbe.search_batch`` discipline. The middle ground
-        between single probes and the distributed ``search_index_wand``
-        job: right for 10-1000-query batches in a serving process.
-
-        ``excludes`` is the per-query MUST_NOT list (parallel to
-        ``queries``; "" or None = no exclusion for that slot) with the
-        same contract as ``search(exclude=)``; exclude terms join the
-        preload union so a batch with excludes still pays the same
-        bounded chunked reads."""
-        from .lru import raised_cache_cap
-
+        """Per-query results for a BATCH of queries: ``search`` on each,
+        in order. ``excludes`` is the per-query MUST_NOT list (parallel
+        to ``queries``; "" or None = no exclusion for that slot) with
+        the same contract as ``search(exclude=)``."""
         if excludes is not None and len(excludes) != len(queries):
             raise ValueError(
                 f"excludes must parallel queries: {len(excludes)} != {len(queries)}"
             )
         xs = excludes if excludes is not None else [""] * len(queries)
-        union = sorted(
-            {t for q in queries for t in tokenize(q)}
-            | {t for x in xs if x for t in tokenize(x)}
-        )
-        with raised_cache_cap(self, len(union) + 1):
-            for i in range(0, len(union), 512):
-                self._load_terms(union[i : i + 512])
-            return [self.search(q, k=k, exclude=x or "") for q, x in zip(queries, xs)]
+        return [self.search(q, k=k, exclude=x or "") for q, x in zip(queries, xs)]
 
     def search(
         self, query: str, k: int = 10, exclude: str = ""
@@ -1767,7 +1777,9 @@ class LocalIndexProbe:
         Lucene-highlighting primitive (slice the doc's tokens at
         [win_start, win_end] to render the snippet). Ranking is
         unchanged."""
-        if not self.has_positions:
+        # an index with zero postings has no positions to miss: every
+        # phrase term is OOV there, so it answers [] below
+        if not self.has_positions and self._terms.size:
             raise ValueError(
                 "LocalIndexProbe.search_phrase needs a positions-enabled "
                 "index — build with store_positions=True"
@@ -1870,8 +1882,7 @@ def local_snippets(
     returns the same rows extended with ``(doc_key, snippet)``. The
     internal docids resolve through the index's own ``docmap`` and the
     text through a ``doc-key``-filtered pyarrow read of the stored
-    corpus (row-group stats prune non-matching groups — the same
-    touch-only-probed-regions discipline as ``_load_terms``).
+    corpus.
     Tokenization is the pinned Python ``tokenize`` (pytest-pinned to
     the JVM ``tokens_col``), and the slice/clamp algebra is the same
     expression, so the snippet STRING is identical to the distributed
